@@ -7,12 +7,15 @@ Usage, from the root of a checkout::
 
 Workloads (README.md in this directory says why each exists):
 
-- ``build_lazy``: warm process; ``run_pipeline`` -> ``write_triples`` of
-  the full corpus into a fresh dir.
-- ``build_checkpointed``: cold process, as a job resubmitted after a
-  crash is; ``run_resumable(stop_after="mentions")`` (a simulated kill
-  after the front end), then ``run_resumable`` again on the same workdir
-  to completion -> ``write_triples``, on the small corpus.
+- ``build_lazy``: ``run_pipeline`` -> ``write_triples`` of the full
+  corpus into a fresh dir.
+- ``build_checkpointed``: ``run_resumable(stop_after="mentions")`` (a
+  simulated kill after the front end), then ``run_resumable`` again on
+  the same workdir to completion -> ``write_triples``, of the full
+  corpus.
+
+Both warm up first with one pass of their own operation on another
+table (``small`` and ``tiny``).
 
 One run is one process and one Spark session issuing one operation at a
 time. Inputs are staged per seed by ``stage.py`` in a child process
@@ -23,6 +26,9 @@ order-insensitive digest (see :func:`measure.digest`).
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` turns on
 Spark's event log, runs the same set-up and one operation, then the
 fixed layer probes of ``probes.py``, and prints the per-layer ledger.
+
+On every way out, the Spark JVM and every process under this one are
+stopped and waited for (``procs.stop_all``).
 
 The last stdout line is the result object; the line before it is the
 run record with the host-drift diagnostics (also appended to
@@ -36,6 +42,7 @@ import json
 import os
 import resource
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -43,17 +50,17 @@ import tempfile
 import time
 
 from measure import calibrate, digest, du
+from procs import stop_all
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "_work")
 MASTER = "local[4]"
 DRIVER_MEMORY = "2g"
-# workload -> (table its operation builds, table of its warm-up pass or
-# None for a cold process)
+# workload -> (table its operation builds, table of its warm-up pass)
 WORKLOADS = {
     "build_lazy": ("full", "small"),
-    "build_checkpointed": ("small", None),
+    "build_checkpointed": ("full", "tiny"),
 }
 
 
@@ -164,7 +171,7 @@ class Run:
                                    extra_conf=conf)
         self.spark.sparkContext.setLogLevel("ERROR")
         self.tables = {t: self.spark.read.parquet(os.path.join(self.data, t))
-                       for t in ("full", "small")}
+                       for t in ("full", "small", "tiny")}
 
     # -- the two operations ---------------------------------------------
     def lazy_op(self, src, tag: str, wd: str, out: str) -> dict:
@@ -214,15 +221,13 @@ class Run:
 
     # -- the run ----------------------------------------------------------
     def warm_up(self, checks: Checks) -> list[float]:
-        """A warm workload runs one pass of its operation on the other
-        table before the clock starts: the code paths are compiled and
-        the Python workers are up, and the timed operation can reuse
-        nothing the warm-up computed. Its digest is checked too (it is
-        the lazy build of the table ``build_checkpointed`` builds)."""
+        """One pass of the workload's operation on its warm-up table
+        before the clock starts: the code paths are compiled and the
+        Python workers are up, and the timed operation can reuse nothing
+        the warm-up computed (another seed, a fresh workdir). Its digest
+        is checked too."""
         mode = self.args.workload
         table = WORKLOADS[mode][1]
-        if table is None:
-            return []
         rec = self.op(mode, table, "warmup")
         checks.check(table, mode, rec["digest"])
         self.discard(rec)
@@ -279,9 +284,11 @@ def main(argv: list[str]) -> int:
     tracer = Tracer()
     run = Run(args, tracer)
     os.makedirs(WORK, exist_ok=True)
-    staging_s = run.stage_inputs()
-    checks = Checks(args.seed, run.data)
+    # a SIGTERM unwinds through the ``finally`` below like an error does
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     try:
+        staging_s = run.stage_inputs()
+        checks = Checks(args.seed, run.data)
         run.start_session()
         record["warmup_walls_s"] = run.warm_up(checks)
         setup_s = time.monotonic() - T0 - staging_s
@@ -300,10 +307,16 @@ def main(argv: list[str]) -> int:
 
             metrics = ledger(run, recs[-1], metrics, checks)
     finally:
-        if run.spark is not None:
-            run.spark.stop()
-        shutil.rmtree(run.dir, ignore_errors=True)
-    record.update({"run_wall_s": time.monotonic() - T0,
+        # cleanup runs to its end, whatever happened before
+        signal.signal(signal.SIGTERM, signal.SIG_IGN)
+        try:
+            if run.spark is not None:
+                run.spark.stop()
+        finally:
+            killed = stop_all()
+            shutil.rmtree(run.dir, ignore_errors=True)
+    record.update({"killed_pids": killed,
+                   "run_wall_s": time.monotonic() - T0,
                    "loadavg_end": os.getloadavg(),
                    "problems": checks.problems,
                    "spans": [(s["name"], round(s["wall_s"], 3))

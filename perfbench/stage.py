@@ -8,7 +8,9 @@ to the engine, with only the ``input_hint`` columns
 - ``full/``: 10 repos x 2,000 files with a 20x monorepo (58,008 files
   with the planted edge rows), generated from ``seed``;
 - ``small/``: the same generator on ``seed + 1`` at 100 files per repo
-  (2,908 files), so nothing built from it can be reused on ``full/``.
+  (2,908 files), so nothing built from it can be reused on ``full/``;
+- ``tiny/``: the same generator on ``seed + 2`` at 10 files per repo
+  (a warm-up table that shares nothing with the other two).
 
 Each table is split into ``PARTS`` files of one row group each, so a
 ``local[4]`` scan gets parallel input splits. ``meta.json`` records each
@@ -33,6 +35,7 @@ N_REPOS = 10
 FILES_PER_REPO = 2000
 SKEW_FACTOR = 20
 SMALL_FILES_PER_REPO = 100
+TINY_FILES_PER_REPO = 10
 PARTS = 8
 COLUMNS = ["repo", "path", "commit", "lang", "content"]
 
@@ -51,7 +54,8 @@ def _write_table(pdf, out_dir: str) -> None:
 
 def stage(seed: int, out: str) -> dict:
     shape = {"seed": seed, "files_per_repo": FILES_PER_REPO,
-             "small_files_per_repo": SMALL_FILES_PER_REPO, "parts": PARTS}
+             "small_files_per_repo": SMALL_FILES_PER_REPO,
+             "tiny_files_per_repo": TINY_FILES_PER_REPO, "parts": PARTS}
     meta_path = os.path.join(out, "meta.json")
     if os.path.exists(meta_path):
         with open(meta_path) as f:
@@ -64,7 +68,8 @@ def stage(seed: int, out: str) -> dict:
     shutil.rmtree(tmp, ignore_errors=True)
     meta = dict(shape)
     for name, fpr, s in (("full", FILES_PER_REPO, seed),
-                         ("small", SMALL_FILES_PER_REPO, seed + 1)):
+                         ("small", SMALL_FILES_PER_REPO, seed + 1),
+                         ("tiny", TINY_FILES_PER_REPO, seed + 2)):
         pdf = make_corpus(n_repos=N_REPOS, files_per_repo=fpr,
                           skew_factor=SKEW_FACTOR, seed=s)[COLUMNS]
         _write_table(pdf, os.path.join(tmp, name))
